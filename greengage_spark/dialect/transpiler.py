@@ -23,6 +23,7 @@ identifiers, comments and numbers, so rewrites never fire inside strings.
 
 from __future__ import annotations
 
+import importlib
 import re
 
 from greengage_spark.dialect.datetime_patterns import pg_pattern_to_java
@@ -6615,28 +6616,6 @@ def _lower_pg_format(args: list[list[str]]) -> list[str]:
     return new + [")"]
 
 
-def _count_capture_groups(pattern: str) -> int:
-    """Capturing groups in a regex literal: '(' not escaped, not a
-    character-class member, and not opening a (?...) non-capturing /
-    lookaround construct."""
-    n, i, in_class = 0, 0, False
-    while i < len(pattern):
-        ch = pattern[i]
-        if ch == "\\":
-            i += 2
-            continue
-        if in_class:
-            if ch == "]":
-                in_class = False
-        elif ch == "[":
-            in_class = True
-        elif ch == "(":
-            if not pattern.startswith("(?", i):
-                n += 1
-        i += 1
-    return n
-
-
 def _lower_regexp_matches(args: list[list[str]]) -> list[str]:
     """Lower regexp_matches(s, pat [, flags]) — adt/regexp.c, SETOF
     text[] — to ``explode(<array of per-match group arrays>)``: zero
@@ -9291,10 +9270,7 @@ def pg_sql(spark, sql: str):
     """Run PG-dialect SQL on Spark (the exec_simple_query entry point,
     postgres.c:1622 — ours is transpile + Catalyst; WITH RECURSIVE routes
     to the fixpoint driver in dialect.recursive_sql)."""
-    # Emitted literals are verbatim-PG (backslashes inert); that contract
-    # holds only under escapedStringLiterals=true, so pin it here — the
-    # caller's session may not have passed through our session factory.
-    spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
+    _pin_literal_parsing(spark)
     if re.match(r"(?is)^\s*with\s+recursive\b", sql):
         from greengage_spark.dialect.recursive_sql import run_recursive_sql
 
@@ -9310,6 +9286,45 @@ def pg_sql(spark, sql: str):
     if m_sl:
         spark.conf.set("greengage.trgm_limit", m_sl.group(1))
         sql = f"SELECT CAST({m_sl.group(1)} AS FLOAT) AS set_limit"
+    return spark.sql(_lower_for_spark(spark, sql))
+
+
+# Python-UDF functions the transpiler emits, by emitted-name prefix, and
+# the ``greengage_spark.functions`` module that registers each.  Any
+# lowering that hands transpiled text to Spark registers the modules its
+# text names first.
+_UDF_MODULES = {
+    "pg_tochar_": "pg_format", "pg_tonumber": "pg_format",
+    "pg_age": "horology", "pg_justify_": "horology",
+    "pg_ts_rank": "textsearch", "pg_ts_headline": "textsearch",
+    "pg_ts_rewrite": "textsearch", "pg_to_tsvector_en": "textsearch",
+    "pg_to_tsvector_cfg": "textsearch",
+    "pg_hmac": "pgcrypto", "pg_crypt": "pgcrypto", "pg_gen_salt": "pgcrypto",
+    "pg_isn_": "isn",
+    "pg_chkpass_": "chkpass",
+    "pg_seg_": "seg",
+    "pg_cube_": "pgcube",
+    "pg_xpath": "xmlquery", "pg_xml_valid": "xmlquery",
+    "pg_encrypt": "pgcipher", "pg_decrypt": "pgcipher",
+    "pg_pgp_sym": "pgcipher", "pg_armor": "pgcipher",
+    "pg_dearmor": "pgcipher", "pg_uuid_v1": "pgcipher",
+}
+
+
+def _pin_literal_parsing(spark) -> None:
+    """Emitted literals are verbatim-PG (backslashes inert); that contract
+    holds only under escapedStringLiterals=true, so pin it — the caller's
+    session may not have passed through our session factory.  Set only
+    when unset: every set logs Spark 4's deprecation warning."""
+    key = "spark.sql.parser.escapedStringLiterals"
+    if spark.conf.get(key, "false") != "true":
+        spark.conf.set(key, "true")
+
+
+def _lower_for_spark(spark, sql: str) -> str:
+    """transpile + the session-dependent substitutions, registering the
+    Python UDFs the emitted text calls — shared by ``pg_sql`` (whole
+    statements) and ``pg_expr`` (expression fragments)."""
     # default_text_search_config (ts_cache.c getTSCurrentConfig): bare
     # to_tsvector/to_tsquery/plainto_tsquery pick up the session config
     try:
@@ -9325,51 +9340,15 @@ def pg_sql(spark, sql: str):
         except Exception:
             lim = "0.3"
         out = out.replace("__gg_trgm_limit__", lim)
-    if "pg_tochar_" in out or "pg_tonumber" in out:
-        from greengage_spark.functions.pg_format import register_udfs
+    for mod in dict.fromkeys(m for p, m in _UDF_MODULES.items() if p in out):
+        importlib.import_module(f"greengage_spark.functions.{mod}").register_udfs(spark)
+    return out
 
-        register_udfs(spark)
-    if "pg_age" in out or "pg_justify_" in out:
-        from greengage_spark.functions import horology
 
-        horology.register_udfs(spark)
-    if (
-        "pg_ts_rank" in out or "pg_ts_headline" in out
-        or "pg_ts_rewrite" in out or "pg_to_tsvector_en" in out
-        or "pg_to_tsvector_cfg" in out
-    ):
-        from greengage_spark.functions import textsearch
+def pg_expr(spark, text: str):
+    """A PG-dialect expression (which may hold subqueries) as a Spark
+    Column — the DML statements' SET/WHERE/DEFAULT/CHECK lowering."""
+    from pyspark.sql import functions as F
 
-        textsearch.register_udfs(spark)
-    if "pg_hmac" in out or "pg_crypt" in out or "pg_gen_salt" in out:
-        from greengage_spark.functions import pgcrypto
-
-        pgcrypto.register_udfs(spark)
-    if "pg_isn_" in out:
-        from greengage_spark.functions import isn
-
-        isn.register_udfs(spark)
-    if "pg_chkpass_" in out:
-        from greengage_spark.functions import chkpass
-
-        chkpass.register_udfs(spark)
-    if "pg_seg_" in out:
-        from greengage_spark.functions import seg as _segmod
-
-        _segmod.register_udfs(spark)
-    if "pg_cube_" in out:
-        from greengage_spark.functions import pgcube as _cubemod
-
-        _cubemod.register_udfs(spark)
-    if "pg_xpath" in out or "pg_xml_valid" in out:
-        from greengage_spark.functions import xmlquery
-
-        xmlquery.register_udfs(spark)
-    if (
-        "pg_encrypt" in out or "pg_decrypt" in out or "pg_pgp_sym" in out
-        or "pg_armor" in out or "pg_dearmor" in out or "pg_uuid_v1" in out
-    ):
-        from greengage_spark.functions import pgcipher
-
-        pgcipher.register_udfs(spark)
-    return spark.sql(out)
+    _pin_literal_parsing(spark)
+    return F.expr(_lower_for_spark(spark, text))

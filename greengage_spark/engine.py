@@ -41,7 +41,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from greengage_spark.dialect.ddl import DDLCatalog, parse_create_table
-from greengage_spark.dialect.transpiler import _find_top_level, pg_sql, transpile
+from greengage_spark.dialect.transpiler import (
+    _find_top_level,
+    pg_expr,
+    pg_sql,
+    transpile,
+)
 
 _PG_TEXT_ESCAPES = {
     "t": "\t", "n": "\n", "r": "\r", "b": "\b", "f": "\f", "v": "\v",
@@ -2324,26 +2329,23 @@ class GreengageEngine:
             f"SELECT {exprs} FROM __returning_rows AS {name}",
         )
 
-    def _touched_files_sql(self, name: str, st, match_pred: str) -> list[str]:
-        """Data files of ``name`` holding ≥1 row matching a SQL predicate
-        (which may hold subqueries / EXISTS over other registered tables).
+    def _lower_dml(self, texts: list[str]) -> list:
+        """SET/WHERE expression texts → Columns.  A subquery may name any
+        relation, so the catalog is registered first when one is present."""
+        if any(re.search(r"(?i)\bselect\b", t) for t in texts):
+            self._register_all()
+        return [pg_expr(self.spark, t) for t in texts]
 
-        The file name is projected with input_file_name() INSIDE the scan
-        subquery — below any join/exchange the predicate's decorrelation
-        introduces — so it is evaluated while the file context exists.
-        Only file names reach the driver; this is the SQL-path analog of
-        WritableTable._touched_files, and makes subquery DML rewrite only
-        the files it touches."""
-        from greengage_spark.operators.dml import _norm_file
-
-        hits = pg_sql(
-            self.spark,
-            f"SELECT DISTINCT __cow_f FROM "
-            f"(SELECT {name}.*, input_file_name() AS __cow_f FROM {name}) "
-            f"AS {name} WHERE ({match_pred}) IS TRUE",
-        ).collect()
-        touched = {_norm_file(r["__cow_f"]) for r in hits}
-        return [f for f in st.files() if f in touched]
+    def _affected(self, st, cond, ret: str | None):
+        """The rows a DML statement's WHERE selects (every row without
+        one), over the table aliased to its name, when RETURNING or the
+        tracked rowcount needs them; records that rowcount."""
+        if ret is None and not self._track_rowcount:
+            return None
+        hit = st.df() if cond is None else st.df().filter(cond)
+        if self._track_rowcount:
+            self.last_rowcount = hit.count()
+        return hit
 
     def _drop(self, stmt: str) -> None:
         m = re.match(r"(?is)^drop\s+(table|view)\s+(if\s+exists\s+)?([\w.]+)$", stmt)
@@ -2543,18 +2545,17 @@ class GreengageEngine:
             if c.name not in cols:
                 full = full.withColumn(
                     c.name,
-                    F.expr(transpile(c.default)) if c.default else F.lit(None),
+                    pg_expr(self.spark, c.default) if c.default else F.lit(None),
                 )
         full = full.select([F.col(c.name) for c in td.columns])
-        checks = {c.name: c.check for c in td.columns if c.check}
+        checks = {c.name: pg_expr(self.spark, c.check) for c in td.columns if c.check}
         if checks:
             # domain CHECK constraints (typecmds.c domain_check): raise
             # only when the predicate is FALSE — NULL passes, as in PG
             full = full.select(
                 [
                     F.when(
-                        F.expr(transpile(checks[c.name])).isNotNull()
-                        & ~F.expr(transpile(checks[c.name])),
+                        checks[c.name].isNotNull() & ~checks[c.name],
                         F.raise_error(
                             F.lit(
                                 f'value for domain column "{c.name}" violates '
@@ -2646,88 +2647,21 @@ class GreengageEngine:
         fidx = _find_top_level(rest, "from")
         widx = _find_top_level(rest, "where")
         if fidx >= 0 and (widx < 0 or fidx < widx):
-            if ret is not None:
-                raise NotImplementedError("RETURNING with UPDATE ... FROM")
-            return self._update_from(name, rest, fidx, widx)
+            return self._update_from(name, rest, fidx, widx, ret)
         set_raw = rest[:widx] if widx >= 0 else rest
         where_raw = rest[widx + 5 :].strip() if widx >= 0 else None
         st = self._storage(name)
-        parts = self._expand_set_parts(name, self._split_top(set_raw))
-        texts = parts + ([where_raw] if where_raw else [])
-        if any(re.search(r"(?is)\(\s*select\b", t) for t in texts):
-            # subqueries in SET/WHERE evaluate through SQL (a scalar
-            # subquery over >1 row errors at runtime, as in PG); CASE
-            # keeps unmatched rows byte-identical.  Copy-on-write: one
-            # input_file_name() pass finds the files holding matching
-            # rows, the CASE projection runs over only those files
-            # (aliased back to the table name so correlated references
-            # resolve; subqueries FROM the table still see the full view),
-            # every other file carries into the new manifest by reference.
-            td = self.ddl.tables[name]
-            self._register_all()
-            sets = {}
-            for part in parts:
-                col, _, expr = part.partition("=")
-                sets[col.strip().lower()] = expr.strip()
-            cond = f"({where_raw})" if where_raw else "TRUE"
-            if self._track_rowcount:
-                self.last_rowcount = pg_sql(
-                    self.spark,
-                    f"SELECT count(*) AS c FROM {name} WHERE ({cond}) IS TRUE",
-                ).collect()[0].c
-            touched = self._touched_files_sql(name, st, cond)
-            proj = ", ".join(
-                f"CASE WHEN ({cond}) IS TRUE THEN ({sets[c.name]}) "
-                f"ELSE {c.name} END AS {c.name}"
-                if c.name in sets
-                else c.name
-                for c in td.columns
-            )
-            st._read_files(touched).createOrReplaceTempView("__cow_target")
-            out = pg_sql(
-                self.spark, f"SELECT {proj} FROM __cow_target AS {name}"
-            )
-            ret_rows = None
-            if ret is not None:
-                # NEW values of matched rows; the plan pins the pre-commit
-                # touched-file list, so it survives the rewrite below
-                ret_rows = pg_sql(
-                    self.spark,
-                    f"SELECT {proj} FROM __cow_target AS {name} "
-                    f"WHERE ({cond}) IS TRUE",
-                )
-            st.rewrite_files(touched, out)
-            self.spark.catalog.dropTempView("__cow_target")
-        else:
-            td = self.ddl.tables[name]
-            set_map = {}
-            for part in parts:
-                col, _, expr = part.partition("=")
-                set_map[col.strip()] = F.expr(transpile(expr.strip()))
-            cond = F.expr(transpile(where_raw)) if where_raw else None
-            if self._track_rowcount:
-                self.last_rowcount = st.df().filter(
-                    cond if cond is not None else F.lit(True)
-                ).count()
-            ret_rows = None
-            if ret is not None:
-                sm = {k.lower(): v for k, v in set_map.items()}
-                old = st.df().filter(
-                    F.coalesce(cond, F.lit(False)) if cond is not None else F.lit(True)
-                )
-                ret_rows = old.select(
-                    [
-                        sm[c.name.lower()].cast(c.spark_type).alias(c.name)
-                        if c.name.lower() in sm
-                        else F.col(c.name)
-                        for c in td.columns
-                    ]
-                )
-            st.update(set_map, cond)
+        sets = self._set_clauses(name, set_raw)
+        cols = self._lower_dml(list(sets.values()) + ([where_raw] if where_raw else []))
+        set_map = dict(zip(sets, cols))
+        cond = cols[-1] if where_raw else None
+        hit = self._affected(st, cond, ret)
+        # RETURNING: NEW values of the matched rows, in their stored types;
+        # the plan pins the pre-commit file list, so it survives the commit
+        new_rows = st._assign(hit, set_map, F.lit(True)) if ret else None
+        st.update(set_map, cond)
         self._register(name)
-        if ret is None:
-            return None
-        return self._returning_df(name, ret_rows, ret)
+        return self._returning_df(name, new_rows, ret) if ret else None
 
     def _values_defaults(self, td, cols, body: str):
         """VALUES-body normalization (rewriteValuesRTE): a bare DEFAULT
@@ -2832,78 +2766,75 @@ class GreengageEngine:
             final.append(f"{col.strip()} = {expr.strip()}")
         return final
 
-    def _update_from(self, name: str, rest: str, fidx: int, widx: int):
+    def _set_clauses(self, name: str, set_raw: str) -> dict[str, str]:
+        """An UPDATE's SET list → {declared column name: expression text}."""
+        declared = {c.name.lower(): c.name for c in self.ddl.tables[name].columns}
+        sets = {}
+        for part in self._expand_set_parts(name, self._split_top(set_raw)):
+            col, _, expr = part.partition("=")
+            col = col.strip()
+            if col.lower() not in declared:
+                raise ValueError(
+                    f'column "{col}" of relation "{name}" does not exist'
+                )
+            sets[declared[col.lower()]] = expr.strip()
+        return sets
+
+    def _update_from(
+        self, name: str, rest: str, fidx: int, widx: int, ret: str | None
+    ):
         """UPDATE target SET ... FROM items WHERE cond
         (nodeModifyTable.c joined UPDATE): each target row joining at
         least one FROM row takes the SET expressions evaluated in the
         joined context; one arbitrary-but-deterministic match wins when
         several join (PG leaves the choice unspecified).
 
-        Copy-on-write: an EXISTS pass over the target finds the files
-        holding rows with ≥1 FROM match; only those files' rows enter the
-        join+rewrite, everything else carries by reference.  The working
-        row set is localCheckpoint-materialized so its row ids are
-        computed ONCE — both sides of the self-join read the same
-        materialized ids (a lineage recompute of monotonically_increasing
+        Copy-on-write: the finder takes the EXISTS form of the join, so
+        only files holding rows with ≥1 FROM match enter the
+        join+rewrite.  The working rows and the chosen matches are
+        localCheckpoint-materialized, so row ids and the winning match
+        are computed ONCE — the write, RETURNING and the rowcount read
+        the same pairing (a lineage recompute of monotonically_increasing
         ids could silently pair wrong rows)."""
         set_raw = rest[:fidx]
         from_raw = rest[fidx + 4 : widx if widx >= 0 else len(rest)].strip()
         where_raw = rest[widx + 5 :].strip() if widx >= 0 else "TRUE"
-        td = self.ddl.tables[name]
         st = self._storage(name)
-        parts = self._expand_set_parts(name, self._split_top(set_raw))
-        sets = {}
-        for part in parts:
-            col, _, expr = part.partition("=")
-            sets[col.strip().lower()] = expr.strip()
-        self._register_all()
-        match_pred = f"EXISTS (SELECT 1 FROM {from_raw} WHERE {where_raw})"
-        touched = self._touched_files_sql(name, st, match_pred)
-        if not touched:
-            st.rewrite_files([], None)
-            self._register(name)
-            return None
-        base = (
-            st._read_files(touched)
-            .withColumn("__rid", F.monotonically_increasing_id())
-            .localCheckpoint(eager=True)
+        sets = self._set_clauses(name, set_raw)
+        (cond,) = self._lower_dml(
+            [f"EXISTS (SELECT 1 FROM {from_raw} WHERE {where_raw})"]
         )
-        base.createOrReplaceTempView("__upd_target")
-        set_cols = ", ".join(
-            f"({sets[c.name.lower()]}) AS __set_{c.name}"
-            for c in td.columns
-            if c.name.lower() in sets
-        )
-        # the working copy re-aliases to the original name so SET/WHERE
-        # can keep their target-qualified references; subqueries that FROM
-        # the table by name still resolve to the full registered view
-        matched = pg_sql(
-            self.spark,
-            f"SELECT * FROM (SELECT {name}.__rid AS __mrid, {set_cols}, "
-            f"row_number() OVER (PARTITION BY {name}.__rid ORDER BY 1) "
-            f"AS __mrn FROM __upd_target AS {name}, {from_raw} "
-            f"WHERE {where_raw}) WHERE __mrn = 1",
-        )
-        joined = base.join(
-            matched, base["__rid"] == matched["__mrid"], "left"
-        )
-        out = joined.select(
-            [
-                F.when(
-                    F.col("__mrid").isNotNull(), F.col(f"__set_{c.name}")
-                )
-                .otherwise(F.col(c.name))
-                .cast(c.spark_type)
-                .alias(c.name)
-                if c.name.lower() in sets
-                else F.col(c.name)
-                for c in td.columns
-            ]
-        )
-        st.rewrite_files(touched, out)
-        self.spark.catalog.dropTempView("__upd_target")
+        touched = st._touched_files(cond)
+        new_rows, hit_rows = None, st._read_files([])
+        if touched:
+            base = (
+                st._read_files(touched)
+                .withColumn("__rid", F.monotonically_increasing_id())
+                .localCheckpoint(eager=True)
+            )
+            base.createOrReplaceTempView("__upd_target")
+            set_cols = ", ".join(f"({e}) AS __set_{c}" for c, e in sets.items())
+            # the working copy re-aliases to the original name so SET/WHERE
+            # can keep their target-qualified references; subqueries that
+            # FROM the table by name still resolve to the full registered view
+            matched = pg_sql(
+                self.spark,
+                f"SELECT * FROM (SELECT {name}.__rid AS __mrid, {set_cols}, "
+                f"row_number() OVER (PARTITION BY {name}.__rid ORDER BY 1) "
+                f"AS __mrn FROM __upd_target AS {name}, {from_raw} "
+                f"WHERE {where_raw}) WHERE __mrn = 1",
+            ).localCheckpoint(eager=True)
+            self.spark.catalog.dropTempView("__upd_target")
+            joined = base.join(matched, base["__rid"] == matched["__mrid"], "left")
+            set_map = {c: F.col(f"__set_{c}") for c in sets}
+            hit = F.col("__mrid").isNotNull()
+            new_rows = st._assign(joined, set_map, hit)
+            hit_rows = st._assign(joined.filter(hit), set_map, hit)
+        st.rewrite_files(touched, new_rows)
+        if self._track_rowcount:
+            self.last_rowcount = hit_rows.count()
         self._register(name)
-        return None
+        return self._returning_df(name, hit_rows, ret) if ret else None
 
     def _delete(self, stmt: str):
         stmt, ret = self._split_returning(stmt)
@@ -2921,65 +2852,18 @@ class GreengageEngine:
                 using_raw = rest[uidx + 5 : widx if widx >= 0 else len(rest)].strip()
             elif widx != 0:
                 raise NotImplementedError("DELETE FROM name [USING items] [WHERE pred]")
-        st = self._storage(name)
-        td = self.ddl.tables[name]
         if using_raw:
             # nodeModifyTable.c: USING joins the target against the items;
             # a target row dies when ANY joined row satisfies WHERE
-            pred = f"EXISTS (SELECT 1 FROM {using_raw} WHERE {where_raw or 'TRUE'})"
-        elif where_raw:
-            pred = f"({where_raw})"
-        else:
-            victims = None
-            if ret:
-                victims = st.df().localCheckpoint(eager=True)
-            if self._track_rowcount:
-                self.last_rowcount = st.df().count()
-            st.delete(F.lit(True))
-            self._register(name)
-            return self._returning_df(name, victims, ret) if ret else None
-        victims = None
-        if ret:
-            # RETURNING projects the rows being deleted (nodeModifyTable.c
-            # ExecDelete → ExecProcessReturning): capture them eagerly
-            # BEFORE the manifest advances
-            self._register_all()
-            st.df().createOrReplaceTempView("__del_target")
-            victims = pg_sql(
-                self.spark,
-                f"SELECT {name}.* FROM __del_target AS {name} WHERE {pred}",
-            ).localCheckpoint(eager=True)
-            self.spark.catalog.dropTempView("__del_target")
-        if using_raw or re.search(r"(?is)\(\s*select\b", pred):
-            # subquery predicates route through SQL; IS NOT TRUE keeps
-            # NULL-predicate rows (PG: WHERE NULL does not delete).
-            # Copy-on-write: only files holding a to-delete row are
-            # rewritten (with their survivors); the rest carry by
-            # reference into the new manifest.
-            self._register_all()
-            if self._track_rowcount:
-                self.last_rowcount = pg_sql(
-                    self.spark,
-                    f"SELECT count(*) AS c FROM {name} WHERE ({pred}) IS TRUE",
-                ).collect()[0].c
-            touched = self._touched_files_sql(name, st, pred)
-            if touched:
-                st._read_files(touched).createOrReplaceTempView("__cow_target")
-                keep = pg_sql(
-                    self.spark,
-                    f"SELECT {name}.* FROM __cow_target AS {name} "
-                    f"WHERE ({pred}) IS NOT TRUE",
-                )
-                st.rewrite_files(touched, keep)
-                self.spark.catalog.dropTempView("__cow_target")
-            else:
-                st.rewrite_files([], None)
-        else:
-            if self._track_rowcount:
-                self.last_rowcount = (
-                    st.df().filter(F.expr(transpile(where_raw))).count()
-                )
-            st.delete(F.expr(transpile(where_raw)))
+            where_raw = f"EXISTS (SELECT 1 FROM {using_raw} WHERE {where_raw or 'TRUE'})"
+        st = self._storage(name)
+        cond = self._lower_dml([where_raw])[0] if where_raw else None
+        hit = self._affected(st, cond, ret)
+        # RETURNING projects the rows being deleted (nodeModifyTable.c
+        # ExecDelete → ExecProcessReturning): capture them eagerly BEFORE
+        # the manifest advances
+        victims = hit.localCheckpoint(eager=True) if ret else None
+        st.delete(F.lit(True) if cond is None else cond)
         self._register(name)
         return self._returning_df(name, victims, ret) if ret else None
 

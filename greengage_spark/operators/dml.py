@@ -16,13 +16,17 @@ that make this survive 100 TB:
 * **INSERT is a pure append** — new rows land in a fresh segment
   directory and the next manifest references old files + new files.  A
   1-row INSERT writes 1 small file, never rewrites the table.
-* **UPDATE/DELETE rewrite only touched files.**  One predicate-pushdown
-  scan (parquet row-group min/max stats skip non-matching files) finds
-  the distinct ``input_file_name()``s holding matching rows; only those
-  files are re-read and rewritten.  Untouched files are carried into the
-  new manifest **by reference, byte-identical** — an UPDATE keyed to one
-  partition leaves every other partition's files untouched on disk
-  (asserted by tests/test_dml.py mtime/identity checks).
+* **UPDATE/DELETE rewrite only touched files.**  One finder scan
+  filters the table by the statement's condition and collects the
+  distinct ``_metadata.file_path`` of the matching rows; only those files
+  are re-read and rewritten.  A plain predicate reaches the parquet scan
+  as a pushed filter (row groups whose statistics exclude it are
+  skipped), but every file is still opened: file-level pruning would
+  need per-file statistics in the manifest, which it does not keep.
+  Untouched files are carried into the new manifest **by reference,
+  byte-identical** — an UPDATE keyed to one partition leaves every
+  other partition's files untouched on disk (asserted by
+  tests/test_dml.py mtime/identity checks).
 * **SplitUpdate needs no special operator**: rewritten rows pass through
   ``repartition(dist_keys)`` on the segment write, re-homing moved rows
   in the same job — delete-stream and insert-stream collapse into one
@@ -46,7 +50,7 @@ from pyspark.sql.types import StructType
 
 
 def _norm_file(p: str) -> str:
-    """input_file_name() URI → plain absolute path."""
+    """``_metadata.file_path`` URI → plain absolute path."""
     if p.startswith("file:"):
         p = urlparse(p).path
     return unquote(p)
@@ -72,6 +76,8 @@ class WritableTable:
         self.root = root
         self.dist_keys = dist_keys
         self.num_partitions = num_partitions
+        # the table name: DML frames are aliased to it
+        self.name = os.path.basename(root.rstrip("/"))
         self.version = self._latest_version()
 
     # ---------------- storage plumbing ----------------
@@ -245,59 +251,97 @@ class WritableTable:
             return df.withColumn(e["name"], src.cast(e["type"]))
         raise ValueError(f"unknown evolution op {op!r}")
 
-    def _read_files(self, files: list[str]) -> DataFrame:
+    def _read_files(
+        self, files: list[str], file_col: str | None = None
+    ) -> DataFrame:
+        """The rows of ``files`` under the current schema, aliased to the
+        table name so SQL-text conditions may qualify its columns and
+        correlate subqueries with it.  ``file_col`` names an extra column
+        holding each row's ``_metadata.file_path`` (the finder's)."""
         if not files:
-            return self.spark.createDataFrame([], self._schema())
+            return self.spark.createDataFrame([], self._schema()).alias(self.name)
         man = self._manifest()
         evs = man.get("evolutions", [])
         cur = StructType.fromJson(json.loads(man["schema"]))
-        if not evs:
-            return self.spark.read.schema(cur).parquet(*files)
         # Files written before an ALTER lack its schema change physically.
         # A file in seg-K was committed as version K, so evolutions with
         # ver < K were already in effect when it was written.  Group files
         # by era (how many log entries they predate), read each group with
         # its era's physical schema, replay the remaining log, and union —
-        # group count is bounded by the number of ALTERs, not files.
-        eras = [man.get("base_schema", man["schema"])] + [e["schema"] for e in evs]
+        # group count is bounded by the number of ALTERs, not files.  The
+        # file column is taken per era, while each scan is still a plain
+        # file source.
+        eras = [man.get("base_schema", man["schema"]) if evs else man["schema"]]
+        eras += [e["schema"] for e in evs]
         groups: dict[int, list[str]] = {}
         for f in files:
             k = self._seg_of(f)
-            era = sum(1 for e in evs if e["ver"] < k)
-            groups.setdefault(era, []).append(f)
+            groups.setdefault(sum(1 for e in evs if e["ver"] < k), []).append(f)
+        cols = [f.name for f in cur.fields] + ([file_col] if file_col else [])
         parts = []
         for era, fs in sorted(groups.items()):
             df = self.spark.read.schema(
                 StructType.fromJson(json.loads(eras[era]))
             ).parquet(*fs)
+            if file_col:
+                df = df.select("*", F.col("_metadata.file_path").alias(file_col))
             for e in evs[era:]:
                 df = self._apply_evolution(df, e)
-            parts.append(df.select([F.col(f.name) for f in cur.fields]))
+            parts.append(df.select(cols) if evs else df)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        return out
+        return out.alias(self.name)
 
     def _touched_files(self, cond: Column) -> list[str]:
-        """One predicate-pushdown scan → the distinct data files holding
-        rows matching ``cond``.  Parquet min/max stats prune files that
-        cannot match; only file NAMES reach the driver."""
+        """The finder: the data files holding rows matching ``cond``.  The
+        filter sits directly on the scan, so a plain predicate is pushed
+        into it; NULL ``cond`` rows do not match.  Only file names are
+        collected."""
+        files = self.files()
+        if not files:
+            return []
         hits = (
-            self._read_files(self.files())
+            self._read_files(files, "__cow_file")
             .filter(cond)
-            .select(F.input_file_name().alias("f"))
+            .select("__cow_file")
             .distinct()
             .collect()
         )
-        touched = {_norm_file(r["f"]) for r in hits}
-        return [f for f in self.files() if f in touched]
+        touched = {_norm_file(r[0]) for r in hits}
+        return [f for f in files if f in touched]
+
+    def _coerce(self, df: DataFrame) -> DataFrame:
+        """Cast to the declared column types: every segment must be
+        read-compatible with the table schema.  A frame already in those
+        types passes through (each projection costs an analysis pass)."""
+        fields = self._schema().fields
+        if [(f.name, f.dataType) for f in df.schema.fields] == [
+            (f.name, f.dataType) for f in fields
+        ]:
+            return df
+        return df.select(*[F.col(f.name).cast(f.dataType) for f in fields])
+
+    def _assign(self, df: DataFrame, set_map: dict[str, Column], cond: Column) -> DataFrame:
+        """UPDATE's projection: SET values where ``cond`` holds, cast back
+        to the declared type — CASE/arithmetic may widen (decimal(10,2) *
+        1.1 → decimal(13,3)), and RETURNING reports what is stored."""
+        types = {f.name: f.dataType for f in self._schema().fields}
+        return df.select(
+            *[
+                F.when(cond, set_map[f]).otherwise(F.col(f)).cast(types[f]).alias(f)
+                if f in set_map
+                else F.col(f)
+                for f in types
+            ]
+        )
 
     # ---------------- DML surface ----------------
 
-    def create(self, df: DataFrame) -> "WritableTable":
+    def create(self, df: DataFrame, *, extra: dict | None = None) -> "WritableTable":
         """CREATE TABLE AS — version 0."""
         assert self.version == -1, f"table already exists at {self.root}"
-        self._commit(self._write_segment(df), df.schema)
+        self._commit(self._write_segment(df), df.schema, extra=extra)
         return self
 
     def df(self) -> DataFrame:
@@ -306,30 +350,17 @@ class WritableTable:
     def insert(self, rows: DataFrame) -> "WritableTable":
         """INSERT INTO — append a new segment; existing files are
         referenced unchanged (nodeModifyTable.c ExecInsert)."""
-        schema = self._schema()
-        # coerce to the declared column types (the pre-append equivalent of
-        # union type reconciliation): every segment must be read-compatible
-        # with the table schema
-        new = self._write_segment(
-            rows.select(*[F.col(f.name).cast(f.dataType) for f in schema.fields])
-        )
-        self._commit(self.files() + new, schema)
-        return self
+        return self.rewrite_files([], rows)
 
     def delete(self, cond: Column) -> "WritableTable":
         """DELETE WHERE cond — rewrite only files holding matching rows,
         keeping each one's complement.  NULL cond rows are kept (PG:
         WHERE NULL does not delete)."""
-        schema = self._schema()
-        cond = F.coalesce(cond, F.lit(False))
         touched = self._touched_files(cond)
-        untouched = [f for f in self.files() if f not in set(touched)]
-        new: list[str] = []
-        if touched:
-            survivors = self._read_files(touched).filter(~cond)
-            new = self._write_segment(survivors)
-        self._commit(untouched + new, schema)
-        return self
+        if not touched:
+            return self.rewrite_files([], None)
+        keep = self._read_files(touched).filter(~F.coalesce(cond, F.lit(False)))
+        return self.rewrite_files(touched, keep)
 
     def replace(self, df: DataFrame) -> "WritableTable":
         """Full-table rewrite (every row restored under the current
@@ -338,25 +369,21 @@ class WritableTable:
         return self
 
     def rewrite_files(
-        self, touched: list[str], new_rows: DataFrame | None
+        self,
+        touched: list[str],
+        new_rows: DataFrame | None,
+        *,
+        extra: dict | None = None,
     ) -> "WritableTable":
-        """Copy-on-write commit for an externally-computed rewrite: the
-        files in ``touched`` are replaced by ``new_rows`` (written as a new
-        segment); every other file carries into the new manifest by
-        reference, byte-identical.  This is the engine's entry point for
-        SQL-evaluated UPDATE ... FROM / subquery DML, giving those forms
-        the same file-pruned scaling as the plain-predicate paths."""
-        schema = self._schema()
+        """The copy-on-write commit every write ends in: the files in
+        ``touched`` are replaced by ``new_rows`` (coerced to the table
+        schema and written as a new segment); every other file carries
+        into the new manifest by reference, byte-identical.  ``extra``
+        rides the manifest (see ``_commit``)."""
         touched_set = set(touched)
-        untouched = [f for f in self.files() if f not in touched_set]
-        new: list[str] = []
-        if touched and new_rows is not None:
-            new = self._write_segment(
-                new_rows.select(
-                    *[F.col(f.name).cast(f.dataType) for f in schema.fields]
-                )
-            )
-        self._commit(untouched + new, schema)
+        kept = [f for f in self.files() if f not in touched_set]
+        new = [] if new_rows is None else self._write_segment(self._coerce(new_rows))
+        self._commit(kept + new, self._schema(), extra=extra)
         return self
 
     def update(self, set_map: dict[str, Column], cond: Column | None = None) -> "WritableTable":
@@ -369,32 +396,11 @@ class WritableTable:
         ``_write_segment`` re-homes changed rows — no separate
         delete+insert streams needed.
         """
-        schema = self._schema()
         if cond is None:
-            touched, untouched = self.files(), []
-            cond_f = F.lit(True)
+            touched, cond = self.files(), F.lit(True)
         else:
-            cond_f = F.coalesce(cond, F.lit(False))
-            touched = self._touched_files(cond_f)
-            untouched = [f for f in self.files() if f not in set(touched)]
-        new: list[str] = []
-        if touched:
-            cur = self._read_files(touched)
-            types = {f.name: f.dataType for f in schema.fields}
-            # cast back to the declared type: CASE/arithmetic may widen
-            # (decimal(10,2) * 1.1 → decimal(13,3)) and every segment must
-            # stay read-compatible with the table schema
-            out = cur.select(
-                *[
-                    F.when(cond_f, set_map[c])
-                    .otherwise(F.col(c))
-                    .cast(types[c])
-                    .alias(c)
-                    if c in set_map
-                    else F.col(c)
-                    for c in cur.columns
-                ]
-            )
-            new = self._write_segment(out)
-        self._commit(untouched + new, schema)
-        return self
+            touched = self._touched_files(cond)
+        if not touched:
+            return self.rewrite_files([], None)
+        new = self._assign(self._read_files(touched), set_map, cond)
+        return self.rewrite_files(touched, new)

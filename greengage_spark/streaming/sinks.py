@@ -7,11 +7,11 @@ copy-on-write ``WritableTable``.  Two modes:
 
 - **append**: each micro-batch becomes a new immutable segment
   (ExecInsert shape — untouched files carry by reference);
-- **upsert**: per-key MERGE — the batch's keys prune the table to the
-  files that hold matching rows (one pushdown scan, file NAMES only on
-  the driver), those files are rewritten without the matched keys, and
-  the batch appends.  The streaming sibling of ModifyTable/SplitUpdate
-  (nodeModifyTable.c).
+- **upsert**: per-key MERGE — ``WritableTable``'s finder prunes the
+  table to the files that hold the batch's keys (one scan that collects
+  file NAMES only), those files are rewritten without the matched
+  keys, and the batch appends in the same commit.  The streaming
+  sibling of ModifyTable/SplitUpdate (nodeModifyTable.c).
 
 Exactly-once: Spark replays a failed micro-batch under the SAME
 ``batch_id``; the sink stores the last applied batch id INSIDE the
@@ -23,10 +23,13 @@ the property that survives a 100 TB table.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from greengage_spark.operators.dml import WritableTable, _norm_file
+from greengage_spark.operators.dml import WritableTable
 
 _BATCH_KEY = "stream_batch_id"
 
@@ -50,12 +53,8 @@ def append_batch(
 ) -> WritableTable:
     """Append one batch as a new segment (existing files by reference)."""
     if st.version < 0:
-        st._commit(st._write_segment(rows), rows.schema, extra=extra)
-        return st
-    schema = st._schema()
-    rows = rows.select(*[F.col(f.name).cast(f.dataType) for f in schema.fields])
-    st._commit(st.files() + st._write_segment(rows), schema, extra=extra)
-    return st
+        return st.create(rows, extra=extra)
+    return st.rewrite_files([], rows, extra=extra)
 
 
 def upsert_batch(
@@ -71,33 +70,22 @@ def upsert_batch(
     batch (replay reaches the same final state)."""
     rows = _latest_per_key(rows, keys, order_cols)
     if st.version < 0:
-        st._commit(st._write_segment(rows), rows.schema, extra=extra)
-        return st
-    schema = st._schema()
-    rows = rows.select(*[F.col(f.name).cast(f.dataType) for f in schema.fields])
-    key_rows = rows.select(*keys).distinct()
-    # files holding rows whose key appears in the batch: one semi-join
-    # scan — input_file_name() is projected BELOW the join (it only
-    # resolves over a single source), and only file names reach the driver
-    hits = (
-        st._read_files(st.files())
-        .withColumn("__f", F.input_file_name())
-        .join(F.broadcast(key_rows), on=keys, how="left_semi")
-        .select("__f")
-        .distinct()
-        .collect()
-    )
-    touched_set = {_norm_file(r["__f"]) for r in hits}
-    touched = [f for f in st.files() if f in touched_set]
-    untouched = [f for f in st.files() if f not in touched_set]
-    new_rows = rows
-    if touched:
-        survivors = st._read_files(touched).join(
-            F.broadcast(key_rows), on=keys, how="left_anti"
+        return st.create(rows, extra=extra)
+    # "the batch holds this row's key": a correlated EXISTS over the
+    # batch's keys, planned as a broadcast semi join in the finder and an
+    # anti join for the survivors
+    batch_keys = F.broadcast(rows.select(*keys).distinct()).alias("__batch")
+    matched = batch_keys.where(
+        reduce(
+            operator.and_,
+            [F.col(f"__batch.{k}") == F.col(f"`{st.name}`.{k}").outer() for k in keys],
         )
-        new_rows = survivors.unionByName(rows)
-    st._commit(untouched + st._write_segment(new_rows), schema, extra=extra)
-    return st
+    ).exists()
+    touched = st._touched_files(matched)
+    new_rows = st._coerce(rows)
+    if touched:
+        new_rows = st._read_files(touched).filter(~matched).unionByName(new_rows)
+    return st.rewrite_files(touched, new_rows, extra=extra)
 
 
 class TableStreamSink:

@@ -839,6 +839,10 @@ class TestFormatAndIntrospection:
             "SELECT regexp_matches('go EAST then west', 'east|west', 'gi') AS m",
         ).collect()
         assert [r.m for r in rows] == [["EAST"], ["west"]]
+        # a ']' first in a bracket expression is literal, so '(' and ')'
+        # inside it are too: no capture group, the whole match returns
+        rows = pg_sql(spark, "SELECT regexp_matches('x]', '[]()]') AS m").collect()
+        assert [r.m for r in rows] == [["]"]]
 
     def test_misc_utils(self, spark):
         row = pg_sql(

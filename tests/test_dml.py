@@ -115,6 +115,31 @@ class TestDML:
             i for i in range(100) if i != 42
         ]
 
+    def test_finder_pushes_plain_predicate(self, spark, tmp_path, monkeypatch):
+        # the touched-file finder filters directly on the parquet scan, so
+        # a plain predicate reaches it as a pushed filter
+        df = spark.createDataFrame(
+            [(i, f"n{i}", float(i)) for i in range(100)],
+            "id long, name string, val double",
+        )
+        t = WritableTable(
+            spark, str(tmp_path / "t"), dist_keys=("id",), num_partitions=8
+        ).create(df)
+        plans = []
+        cls = type(t.df())
+        collect = cls.collect
+
+        def spy(frame):
+            plans.append(frame._jdf.queryExecution().executedPlan().toString())
+            return collect(frame)
+
+        monkeypatch.setattr(cls, "collect", spy)
+        t.update({"name": F.lit("X")}, F.col("id") == 7)
+        monkeypatch.undo()
+        assert any(
+            "PushedFilters: [IsNotNull(id), EqualTo(id,7)]" in p for p in plans
+        ), plans
+
     def test_delete_all_rows_keeps_schema(self, table):
         table.delete(F.lit(True))
         assert table.df().count() == 0
@@ -193,6 +218,87 @@ class TestEngineSubqueryDMLPruning:
         self._assert_carried(before, st, "subquery DELETE")
         ids = sorted(r.id for r in eng.execute("SELECT id FROM big").collect())
         assert ids == [i for i in range(100) if i != 7]
+
+    def test_subquery_dml_after_add_column(self, spark, tmp_path):
+        # files from before and after an ADD COLUMN are read as two schema
+        # eras; the finder must see both and still carry every untouched
+        # file of either era
+        eng = self._eng(spark, tmp_path)
+        eng.execute("ALTER TABLE big ADD COLUMN score int8 DEFAULT 0")
+        eng.execute(
+            "INSERT INTO big SELECT id, 'm' || id::text, id FROM "
+            "(SELECT explode(sequence(100, 139)) AS id)"
+        )
+        st = eng._storage("big")
+        before = self._stat_map(st)
+        eng.execute(
+            "UPDATE big SET score = (SELECT ref.id * 10 FROM ref "
+            "WHERE ref.id = big.id) WHERE id IN (SELECT id FROM ref)"
+        )
+        self._assert_carried(before, st, "subquery UPDATE after ADD COLUMN")
+        before = self._stat_map(st)
+        eng.execute("DELETE FROM big WHERE id IN (SELECT id + 100 FROM ref)")
+        self._assert_carried(before, st, "subquery DELETE after ADD COLUMN")
+        got = {
+            r.id: r.score
+            for r in eng.execute("SELECT id, score FROM big").collect()
+        }
+        assert len(got) == 139 and 107 not in got
+        assert got[7] == 70 and got[8] == 0 and got[108] == 108
+
+
+class TestEngineDMLLowering:
+    """Plain and subquery UPDATE/DELETE share one lowering and one
+    copy-on-write path, so they agree on functions and stored types."""
+
+    def test_plain_update_registers_python_udfs(self, spark, tmp_path):
+        # a fresh session has none of the Python UDFs registered; the SET
+        # expression's to_char lowering must register its own
+        from greengage_spark.engine import GreengageEngine
+
+        eng = GreengageEngine(spark.newSession(), str(tmp_path / "wh"))
+        eng.execute(
+            "CREATE TABLE acct (id int8, name text, bal numeric(12,2)) "
+            "DISTRIBUTED BY (id)"
+        )
+        eng.execute("INSERT INTO acct VALUES (1, 'a', 10.5), (2, 'b', 2)")
+        eng.execute("UPDATE acct SET name = to_char(bal, 'FM9990.00') WHERE id = 1")
+        got = sorted(
+            (r.id, r.name) for r in eng.execute("SELECT id, name FROM acct").collect()
+        )
+        assert got == [(1, "10.50"), (2, "b")]
+
+    def test_returning_is_stored_value_for_every_update_form(self, spark, tmp_path):
+        from decimal import Decimal
+
+        from greengage_spark.engine import GreengageEngine
+
+        eng = GreengageEngine(spark, str(tmp_path / "wh"))
+        eng.execute(
+            "CREATE TABLE acct (id int8, bal numeric(12,2)) DISTRIBUTED BY (id)"
+        )
+        eng.execute("INSERT INTO acct VALUES (10, 10), (11, 11), (12, 12)")
+        eng.execute("CREATE TABLE adj (id int8, f numeric(4,2))")
+        eng.execute("INSERT INTO adj VALUES (12, 1.1)")
+        forms = {
+            10: "UPDATE acct SET bal = bal * 1.1 WHERE id = 10 RETURNING bal",
+            11: "UPDATE acct SET bal = bal * 1.1 WHERE id IN (SELECT 11) "
+            "RETURNING bal",
+            12: "UPDATE acct SET bal = bal * adj.f FROM adj "
+            "WHERE acct.id = adj.id RETURNING bal",
+        }
+        returned = {}
+        for k, sql in forms.items():
+            df = eng.execute(sql)
+            assert df.schema["bal"].dataType.simpleString() == "decimal(12,2)", sql
+            returned[k] = [r.bal for r in df.collect()]
+        stored = {
+            r.id: r.bal for r in eng.execute("SELECT id, bal FROM acct").collect()
+        }
+        assert stored == {
+            10: Decimal("11.00"), 11: Decimal("12.10"), 12: Decimal("13.20")
+        }
+        assert returned == {k: [v] for k, v in stored.items()}
 
 
 class TestDeleteReturningSelectInto:
